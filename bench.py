@@ -427,14 +427,6 @@ def main() -> None:
                 dt = round(time.perf_counter() - t0, 3)
                 extra_base[name] = min(extra_base.get(name, dt), dt)
 
-        # release the sf0.1 pipeline's survivor cache before the 10x
-        # phase — slots are per-(session, corpus, params), so the
-        # base-corpus cache would otherwise sit in MEMORY_AND_DISK
-        # for the whole scaled pass with zero reuse
-        from shmr_spark.operators.training_pipeline import clear_pipeline_caches
-
-        clear_pipeline_caches()
-
         timed = {**headline, **scale_extra}
         for _ in range(2):
             for name, spec in sorted(timed.items()):
@@ -467,14 +459,6 @@ def main() -> None:
             if n in scale_extra
         }
 
-        def _extras_shuffle(d) -> dict[str, dict[str, int]] | None:
-            # pipeline_e2e caches survivors per corpus — a cache hit
-            # would record ~0 shuffle bytes for whichever scale ran
-            # second, making the base/sf1 ratio meaningless; both
-            # passes measure the cold plan
-            clear_pipeline_caches()
-            return _shuffle_pass(shuffle_extras, d)
-
         result["scale_check"] = {
             "sf": 1.0,
             "minhash_pairs": {
@@ -501,10 +485,12 @@ def main() -> None:
             # flagships) at both scales — streaming/staging extras
             # excluded: their job streams interleave staging copies
             # and micro-batch planning, so an app-total delta would
-            # not isolate the query's own exchange
+            # not isolate the query's own exchange. pipeline_e2e keeps
+            # no state between calls, so both scales measure its cold
+            # plan.
             "extras_shuffle_bytes": {
-                "base": _extras_shuffle(sf_dir),
-                "sf1": _extras_shuffle(scaled_dir),
+                "base": _shuffle_pass(shuffle_extras, sf_dir),
+                "sf1": _shuffle_pass(shuffle_extras, scaled_dir),
             },
         }
 

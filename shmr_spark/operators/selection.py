@@ -110,8 +110,8 @@ def select_by_token_budget(
     preserve order — so the decomposition stays order-preserving and
     the output is bit-identical either way. Costs one extra reference
     to ``df`` (the min/max aggregate); callers with expensive
-    lineages should persist ``df`` first, which the training pipeline
-    already does at its materialization point.
+    lineages should materialize ``df`` first (a lazy
+    ``localCheckpoint``, as the training pipeline does).
     """
     df = df.filter(F.col(score_col).isNotNull())
     if auto_scale_score:
@@ -191,8 +191,8 @@ def select_by_token_fraction(
     separate driver action. Note ``df`` is still REFERENCED TWICE in
     that plan (the prefix-sum path and the total aggregate), so an
     expensive upstream lineage (a dedup chain) is scanned twice
-    unless the caller persists ``df`` first — training_pipeline does
-    exactly that at its materialization point. Same keep rule:
+    unless the caller materializes ``df`` first — training_pipeline
+    checkpoints it. Same keep rule:
     start_tok < fraction · total — but the cut is evaluated in EXACT
     DECIMAL arithmetic in-plan, not double: a double-typed product
     drifts past 2⁵³ total tokens (the integer-exact discipline

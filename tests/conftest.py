@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import csv
+import glob
 import sys
 import os
 
@@ -18,6 +20,28 @@ if REPO not in _pp.split(os.pathsep):
 from shmr_spark import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SHMR_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+# The pure-Python shmr reference, checked out next to this repo. Only
+# the differential tests run its binary; everything else reads the
+# committed synthetic people fixture in the reference's layout.
+REF = os.path.join(os.path.dirname(REPO), "reference")
+REF_RES = os.path.join(REF, "tests", "resources")
+requires_reference = pytest.mark.skipif(
+    not os.path.exists(os.path.join(REF_RES, "people.00.csv")),
+    reason="reference shmr checkout absent",
+)
+
+PEOPLE = os.path.join(REPO, "tests", "resources")
+
+
+def people_rows(pattern: str = "people.00.csv") -> list[list[str]]:
+    """Oracle over the committed people fixture: the data rows (header
+    skipped) of every file matching ``pattern``, in glob order."""
+    rows: list[list[str]] = []
+    for path in sorted(glob.glob(os.path.join(PEOPLE, pattern))):
+        with open(path, newline="") as f:
+            rows += list(csv.reader(f))[1:]
+    return rows
 
 
 @pytest.fixture(scope="session")

@@ -1,11 +1,14 @@
 """Compat-CLI tests: drive ``shmr_spark.compat.cli.main`` exactly the
 way the reference's tests drive its CLI (main(argv) calls), against
-(a) the reference's own people.csv fixture with the reference's golden
-values, and (b) synthetic ND-JSON partitions.
+(a) the committed synthetic people fixture (tests/resources, the
+reference's people.csv layout), with goldens computed by the
+pure-Python csv oracle ``people_rows``, and (b) synthetic ND-JSON
+partitions.
 
-Reference goldens (BASELINE.md): count(p0)=100, sum(age) p0=5047,
-map+sum ≡ reduce, split residue (age - i) % 5 == 0, coalesce(100, rpp
-50) = 2 files.
+The golden shapes follow the reference's tests (FIXTURES.md §A):
+count, sum(age), map+sum ≡ reduce, --init_val, split residue
+(age - i) % 5 == 0, coalesce(records_per_partition=50) file count, and
+the whole-glob map.
 """
 
 from __future__ import annotations
@@ -16,70 +19,72 @@ import os
 import pytest
 
 from shmr_spark.compat.cli import main
+from tests.conftest import PEOPLE, people_rows
 
-REF_RES = "/root/reference/tests/resources"
 CSV_ARGS = [
     "--skip_nrows", "1",
     "-d", "shmr_spark.compat.funcs.csv_loads",
     "-s", "shmr_spark.compat.funcs.csv_dumps",
 ]
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(f"{REF_RES}/people.00.csv"), reason="reference fixture absent"
-)
+P0 = f"{PEOPLE}/people.00.csv"
 
 
 def _run(spark, argv):
     main(argv, spark=spark)
 
 
+def _ages(pattern: str = "people.00.csv") -> list[int]:
+    return [int(r[3]) for r in people_rows(pattern)]
+
+
 def test_count_partition0_golden(spark, tmp_path):
     out = tmp_path / "cnt.txt"
-    _run(spark, ["-i", f"{REF_RES}/people.00.csv", *CSV_ARGS,
-                 "partition.count", "--outfile", str(out)])
-    assert out.read_text() == "100"
+    _run(spark, ["-i", P0, *CSV_ARGS, "partition.count", "--outfile", str(out)])
+    assert out.read_text() == str(len(_ages()))
 
 
-def test_map_sum_golden_5047(spark, tmp_path):
+def test_map_sum_golden(spark, tmp_path):
     out = tmp_path / "ages.txt"
-    _run(spark, ["-i", f"{REF_RES}/people.00.csv", *CSV_ARGS,
+    _run(spark, ["-i", P0, *CSV_ARGS,
                  "-s", "shmr_spark.compat.funcs.str_dumps",
                  "partition.map", "--fn", "tests.cli_fixture_fns.get_age",
                  "--outfile", str(out)])
     ages = [int(x) for x in out.read_text().splitlines()]
-    assert len(ages) == 100
-    assert sum(ages) == 5047
+    assert ages == _ages()
     # .meta sidecar parity
-    assert json.loads((tmp_path / "ages.meta").read_text()) == {"n_records": 100}
+    assert json.loads((tmp_path / "ages.meta").read_text()) == {
+        "n_records": len(ages)
+    }
 
 
-def test_reduce_golden_5047_and_crosscheck(spark, tmp_path):
+def test_reduce_golden_and_crosscheck(spark, tmp_path):
     out = tmp_path / "sum.json"
     # CSV deser in, JSON ser out: an int accumulator is not a CSV row
     # (the reference's own csv_dumps would reject it the same way)
-    _run(spark, ["-i", f"{REF_RES}/people.00.csv", *CSV_ARGS,
+    _run(spark, ["-i", P0, *CSV_ARGS,
                  "-s", "shmr_spark.compat.funcs.json_dumps",
                  "partition.reduce", "--fn", "tests.cli_fixture_fns.sum_age",
                  "--outfile", str(out)])
-    assert json.loads(out.read_text().strip()) == 5047
+    assert json.loads(out.read_text().strip()) == sum(_ages())
 
 
 def test_reduce_with_init_val(spark, tmp_path):
     out = tmp_path / "sum.json"
-    _run(spark, ["-i", f"{REF_RES}/people.00.csv", *CSV_ARGS,
+    _run(spark, ["-i", P0, *CSV_ARGS,
                  "-s", "shmr_spark.compat.funcs.json_dumps",
                  "partition.reduce", "--fn", "tests.cli_fixture_fns.sum_age",
                  "--outfile", str(out), "--init_val", "100"])
-    assert json.loads(out.read_text().strip()) == 5147
+    assert json.loads(out.read_text().strip()) == 100 + sum(_ages())
 
 
 def test_split_by_key_residue_golden(spark, tmp_path):
     out = tmp_path / "bucket.{auto}.csv"
-    _run(spark, ["-i", f"{REF_RES}/people.00.csv", *CSV_ARGS,
+    _run(spark, ["-i", P0, *CSV_ARGS,
                  "partition.split_by_key",
                  "--key_fn", "tests.cli_fixture_fns.age_key",
                  "--outfile", str(out), "--num_partitions", "5"])
     files = sorted(p for p in os.listdir(tmp_path) if p.endswith(".csv"))
-    assert len(files) == 5
+    assert len(files) == len({a % 5 for a in _ages()})
     total = 0
     for i, name in enumerate(files):
         rows = (tmp_path / name).read_text().splitlines()
@@ -87,30 +92,30 @@ def test_split_by_key_residue_golden(spark, tmp_path):
         for row in rows:
             age = int(row.rsplit(",", 1)[1])
             assert (age - i) % 5 == 0
-    assert total == 100
+    assert total == len(_ages())
 
 
-def test_coalesce_golden_2_files(spark, tmp_path):
+def test_coalesce_golden_file_count(spark, tmp_path):
     out = tmp_path / "chunk.{auto}.csv"
-    _run(spark, ["-i", f"{REF_RES}/people.00.csv", *CSV_ARGS,
+    _run(spark, ["-i", P0, *CSV_ARGS,
                  "partitions.coalesce", "--outfile", str(out),
                  "--records_per_partition", "50"])
     files = sorted(p for p in os.listdir(tmp_path) if p.endswith(".csv"))
-    assert len(files) == 2
-    assert all(
-        len((tmp_path / f).read_text().splitlines()) == 50 for f in files
-    )
+    n = len(_ages())
+    sizes = [len((tmp_path / f).read_text().splitlines()) for f in files]
+    assert sizes == [50] * (n // 50) + ([n % 50] if n % 50 else [])
 
 
 def test_glob_distributed_map(spark, tmp_path):
     """The Spark upgrade: one invocation over the whole glob replaces
-    the reference's xargs loop — all 300 rows in one run."""
+    the reference's xargs loop — every row of every file in one run."""
     out = tmp_path / "all_ages.txt"
-    _run(spark, ["-i", f"{REF_RES}/people.*.csv", *CSV_ARGS,
+    _run(spark, ["-i", f"{PEOPLE}/people.*.csv", *CSV_ARGS,
                  "-s", "shmr_spark.compat.funcs.str_dumps",
                  "partition.map", "--fn", "tests.cli_fixture_fns.get_age",
                  "--outfile", str(out)])
-    assert len(out.read_text().splitlines()) == 300
+    ages = [int(x) for x in out.read_text().splitlines()]
+    assert sorted(ages) == sorted(_ages("people.*.csv"))
 
 
 # -- ND-JSON synthetic partitions -----------------------------------------

@@ -37,15 +37,12 @@ import sys
 import pytest
 
 from shmr_spark.compat.cli import main as compat_main
+from tests.conftest import REF, REF_RES, requires_reference
 
-REF = "/root/reference"
-REF_RES = f"{REF}/tests/resources"
 SHIMS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "ref_shims")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(f"{REF_RES}/people.00.csv"), reason="reference absent"
-)
+pytestmark = requires_reference
 
 CSV = ["--skip_nrows", "1", "-d", "shmr.csv_loads", "-s", "shmr.csv_dumps"]
 

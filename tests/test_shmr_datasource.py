@@ -12,8 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from shmr_spark.sources.shmr_datasource import ShmrDataSource
-
-REF_RES = "/root/reference/tests/resources"
+from tests.conftest import PEOPLE, people_rows, requires_reference
 
 
 @pytest.fixture()
@@ -66,18 +65,21 @@ def test_json_schema_inference(registered, tmp_path):
 
 
 def test_csv_skip_nrows_reference_fixture(registered):
-    """Read the reference's own people fixture: header skipping and the
-    5047 age golden (BASELINE.md)."""
+    """Read the people fixture (the reference's CSV layout): the header
+    is skipped, and count and age sum match a pure-Python csv read."""
     spark = registered
+    rows = people_rows()
     csv = (
         spark.read.format("shmr")
         .schema("full_name string, first string, last string, age string")
         .option("codec", "csv")
         .option("skip_nrows", "1")
-        .load(f"{REF_RES}/people.00.csv")
+        .load(f"{PEOPLE}/people.00.csv")
     )
-    assert csv.count() == 100
-    assert csv.select(F.sum(F.col("age").cast("int"))).collect()[0][0] == 5047
+    assert csv.count() == len(rows)
+    assert csv.select(F.sum(F.col("age").cast("int"))).collect()[0][0] == sum(
+        int(r[3]) for r in rows
+    )
 
 
 def test_gzip_roundtrip(registered, tmp_path):
@@ -106,9 +108,7 @@ def test_text_codec(registered, tmp_path):
     assert sorted(r.value for r in back.collect()) == ["alpha", "beta", "gamma"]
 
 
-@pytest.mark.skipif(
-    not os.path.exists(f"{REF_RES}/people.00.csv"), reason="reference absent"
-)
+@requires_reference
 def test_writer_output_is_valid_reference_input(registered, tmp_path):
     """Interop both ways: files written by the DataSource run through
     the actual reference CLI (count must use our .meta sidecar; map
@@ -140,9 +140,7 @@ def test_writer_output_is_valid_reference_input(registered, tmp_path):
     assert vals == list(range(100))
 
 
-@pytest.mark.skipif(
-    not os.path.exists(f"{REF_RES}/people.00.csv"), reason="reference absent"
-)
+@requires_reference
 def test_writer_gz_output_is_valid_reference_input(registered, tmp_path):
     """Same interop claim for COMPRESSED output: the .meta sidecar of
     'part-N.json.gz' must be 'part-N.json.meta' (reference's

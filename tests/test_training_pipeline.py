@@ -10,10 +10,7 @@ from pyspark.sql import functions as F
 
 from shmr_spark.catalog import load_table
 from shmr_spark.dedup import minhash_near_duplicates
-from shmr_spark.operators.training_pipeline import (
-    clear_pipeline_caches,
-    training_pipeline,
-)
+from shmr_spark.operators.training_pipeline import training_pipeline
 
 
 def test_training_pipeline_invariants(spark, sf_dir, tmp_path):
@@ -149,7 +146,20 @@ def test_training_pipeline_dsir_selection(spark, sf_dir):
             hashed.unpersist()
     finally:
         d.unpersist()
-        # the modes leave corpus-sized survivor caches in the
-        # module slot map — release them so the rest of the suite
-        # doesn't carry the MEMORY_AND_DISK frames
-        clear_pipeline_caches()
+
+
+def test_training_pipeline_keeps_no_state_between_calls(spark, sf_dir):
+    """A call leaves nothing in the session's CacheManager, and a
+    repeated call recomputes to the same rows."""
+    spark.catalog.clearCache()
+    results = []
+    for _ in range(2):
+        df = training_pipeline(spark, sf_dir, n_shards=4)
+        row = df.agg(
+            F.count("*").alias("n"),
+            F.expr(f"bit_xor(xxhash64({', '.join(df.columns)}))").alias("h"),
+        ).collect()[0]
+        results.append((row.n, row.h))
+    assert results[0][0] > 0
+    assert results[0] == results[1]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

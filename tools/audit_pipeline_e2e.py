@@ -14,7 +14,7 @@ Arms:
              the committed r10 code is that the shard bucket was
              already explicit there too)
   r11_shape  the current code: doc-id and start-tok buckets both
-             derived from ONE aggregate over the persisted survivors
+             derived from ONE aggregate over the checkpointed survivors
 
 Run: python tools/audit_pipeline_e2e.py  → one JSON line, also
 written to PIPELINE_AUDIT.json at the repo root.
@@ -83,10 +83,7 @@ def plan_counts(df) -> dict:
 
 def main() -> None:
     from shmr_spark.operators import packing
-    from shmr_spark.operators.training_pipeline import (
-        clear_pipeline_caches,
-        training_pipeline,
-    )
+    from shmr_spark.operators.training_pipeline import training_pipeline
 
     spark = get_spark(app_name="audit_pipeline_e2e")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -105,7 +102,6 @@ def main() -> None:
 
         tp.pack_sequences = patch
         try:
-            clear_pipeline_caches()
 
             def build():
                 return training_pipeline(spark, sf_dir)
@@ -129,7 +125,6 @@ def main() -> None:
         finally:
             packing.pack_sequences = real_pack
             tp.pack_sequences = real_pack
-    clear_pipeline_caches()
 
     result = {
         "metric": "pipeline_e2e_stage_audit",
@@ -138,13 +133,13 @@ def main() -> None:
         "note": (
             "r10_shape re-derives pack_sequences' bucket from an in-plan "
             "min/max over the selection segment per action; r11_shape "
-            "derives both buckets from one aggregate over the persisted "
+            "derives both buckets from one aggregate over the checkpointed "
             "survivors. 'scans' counts TEXTUAL plan occurrences (shared "
             "subtrees print repeatedly but execute once); "
             "input_vs_documents_file is the measured scan multiple — "
             "actual storage bytes read per action over the documents "
             "file size. The pipeline's input is re-read across its "
-            "ACTIONS (survivor persist + minhash checkpoints bound the "
+            "ACTIONS (survivor and minhash checkpoints bound the "
             "recompute), not within one plan."
         ),
     }
