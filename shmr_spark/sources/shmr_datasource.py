@@ -20,6 +20,21 @@ This source maps that model onto Spark's:
   WITH the ``.meta`` sidecar, so output datasets are valid inputs for
   the reference CLI itself (and for our compat CLI's memoized count).
 
+The json codec crosses the Python-worker boundary as Arrow record
+batches in both directions. Invariants:
+
+- the per-line decoder (``_json_rows``, inside ``_decode_file``)
+  defines what a read returns. A flat-schema read with no pushed filter
+  parses each ~1 MiB block of whole lines with ``pyarrow.json`` and
+  keeps the result only when checks prove it identical: every line is
+  one ``{...}`` object, the block is valid UTF-8, the parse succeeded
+  with one row per line, and no double is -0.0. Any other block is
+  decoded line by line;
+- the writer (a ``DataSourceArrowWriter``) is byte-identical to
+  ``json.dumps(dict(zip(names, row)), separators=(",", ":"),
+  default=_json_default)`` per row, with struct values written as JSON
+  objects keyed by field name so that the reader takes them back.
+
 Options (read): ``path`` (file or glob), ``codec`` = json|csv|text
 (default json), ``skip_nrows`` (per file, default 0), ``pushdown`` =
 true|false (default false — evaluate claimed filters source-side,
@@ -52,13 +67,13 @@ import glob as globmod
 import gzip
 import json
 import os
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterable, Iterator, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceWriter,
     EqualNullSafe,
     EqualTo,
     Filter,
@@ -76,7 +91,19 @@ from pyspark.sql.datasource import (
     StringStartsWith,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructType, _parse_datatype_string
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    ByteType,
+    IntegerType,
+    LongType,
+    MapType,
+    Row,
+    ShortType,
+    StringType,
+    StructType,
+    _parse_datatype_string,
+)
 
 
 def _open_by_ext(path: str, mode: str):
@@ -127,24 +154,56 @@ def _caster(simple_type: str):
     return cast
 
 
+# The flat types the json Arrow decode and filter pushdown handle. No
+# "float": the non-pushdown pipeline truncates float32 columns at the
+# Arrow boundary BEFORE Spark evaluates filters, so a source-side
+# comparison on the untruncated value could disagree at precision
+# boundaries; and pyarrow may round a float32 column's text straight to
+# float32 where the per-line path rounds through a double first.
+_SIMPLE_TYPES = frozenset(
+    ("tinyint", "smallint", "int", "bigint", "double", "string", "boolean")
+)
+
+
+def _json_rows(
+    lines: Iterable[bytes], path: str, first_line: int, schema: StructType
+) -> Iterator[tuple]:
+    """The json codec's semantics, one line at a time: ``json.loads``,
+    then each schema field through ``_caster``; missing keys are NULL,
+    extra keys are ignored. ``first_line`` is the file line number of
+    the first of ``lines`` (1-based), for the error message."""
+    names = schema.fieldNames()
+    casts = [_caster(f.dataType.simpleString()) for f in schema.fields]
+    for n, line in enumerate(lines, first_line):
+        try:
+            rec = json.loads(line)
+        except ValueError as e:  # JSONDecodeError, UnicodeDecodeError
+            raise ValueError(f"malformed JSON record in {path} line {n}: {e}") from None
+        if not isinstance(rec, dict):
+            raise ValueError(
+                f"malformed JSON record in {path} line {n}: "
+                f"expected an object, got {type(rec).__name__}"
+            )
+        yield tuple(c(rec.get(k)) for k, c in zip(names, casts))
+
+
 def _decode_file(
     path: str, schema: StructType, codec: str, skip_nrows: int
 ) -> Iterator[tuple]:
-    """Per-file decode loop shared by the batch and stream readers —
-    the reference's line-at-a-time record model under every codec."""
+    """Per-file, per-line decode under every codec — the reference's
+    line-at-a-time record model, and the definition of what a read
+    returns."""
     import csv as csvmod
     import io as iomod
 
-    names = schema.fieldNames()
-    casts = [_caster(f.dataType.simpleString()) for f in schema.fields]
     with _open_by_ext(path, "rb") as f:
         for _ in range(skip_nrows):
             next(f, None)
         if codec == "json":
-            for line in f:
-                rec = json.loads(line)
-                yield tuple(c(rec.get(n)) for n, c in zip(names, casts))
+            yield from _json_rows(f, path, skip_nrows + 1, schema)
         elif codec == "csv":
+            names = schema.fieldNames()
+            casts = [_caster(f.dataType.simpleString()) for f in schema.fields]
             for line in f:
                 row = next(csvmod.reader(iomod.StringIO(line.decode())))
                 if len(row) != len(names):
@@ -158,6 +217,110 @@ def _decode_file(
                 yield (line.decode().rstrip("\r\n"),)
         else:
             raise ValueError(f"unknown codec: {codec}")
+
+
+# A json block is parsed by pyarrow when it is about this many bytes.
+_BLOCK_BYTES = 1 << 20
+
+
+def _arrow_block(block: bytes, pa_schema, doubles: list[int]):
+    """``block`` (whole ``\\n``-terminated lines) parsed by
+    ``pyarrow.json`` as one RecordBatch, or None where that could differ
+    from ``_json_rows``. pyarrow silently drops blank lines, splits
+    ``{...}{...}`` on one line into two rows, reads ``-0`` as -0.0
+    (``json.loads`` gives the int 0, cast to 0.0), skips undecodable
+    UTF-8 inside ignored fields, and crashes the process on a ``null``
+    line. It raises on every coercion ``_caster`` performs, and on
+    duplicate keys, ``1e400`` and lone surrogates. So the parse is kept
+    only when every line starts with ``{`` and ends with ``}``, the
+    block is valid UTF-8, there is one row per line, and no double is
+    -0.0."""
+    import io as iomod
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.json as pajson
+
+    n = block.count(b"\n")
+    if not (
+        block.startswith(b"{")
+        and block.count(b"\n{") == n - 1
+        and block.count(b"}\n") + block.count(b"}\r\n") == n
+    ):
+        return None
+    try:
+        block.decode()
+        table = pajson.read_json(
+            iomod.BytesIO(block),
+            read_options=pajson.ReadOptions(use_threads=False, block_size=len(block) + 1),
+            parse_options=pajson.ParseOptions(
+                explicit_schema=pa_schema, unexpected_field_behavior="ignore"
+            ),
+        )
+    except (UnicodeDecodeError, pa.ArrowInvalid):
+        return None
+    if table.num_rows != n:
+        return None
+    cols = [c.combine_chunks() for c in table.columns]
+    for i in doubles:
+        v = cols[i].to_numpy(zero_copy_only=False)
+        if np.any((v == 0) & np.signbit(v)):
+            return None
+    # the parse drops NOT NULL flags; every batch must carry pa_schema
+    return pa.RecordBatch.from_arrays(cols, schema=pa_schema)
+
+
+def _json_batches(path: str, schema: StructType, skip_nrows: int) -> Iterator:
+    """The json codec as Arrow RecordBatches, one per ~1 MiB block of
+    whole lines: ``_arrow_block`` where it proves the result identical
+    to ``_json_rows``, else ``_json_rows`` converted the way Spark
+    converts a reader's tuples."""
+    import io as iomod
+
+    import pyarrow as pa
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pa_schema = to_arrow_schema(schema)
+    convs = [LocalDataToArrowConversion._create_converter(f.dataType) for f in schema.fields]
+    doubles = [i for i, f in enumerate(schema.fields) if f.dataType.simpleString() == "double"]
+    line = skip_nrows + 1  # file line number of the block's first line
+    with _open_by_ext(path, "rb") as f:
+        for _ in range(skip_nrows):
+            next(f, None)
+        while block := f.read(_BLOCK_BYTES):
+            block += f.readline()
+            if not block.endswith(b"\n"):
+                block += b"\n"  # the file's last line had none
+            batch = _arrow_block(block, pa_schema, doubles)
+            if batch is None:
+                rows = list(_json_rows(iomod.BytesIO(block), path, line, schema))
+                batch = pa.RecordBatch.from_arrays(
+                    [[c(r[i]) for r in rows] for i, c in enumerate(convs)],
+                    schema=pa_schema,
+                )
+            yield batch
+            line += block.count(b"\n")
+
+
+def _read_file(
+    path: str, schema: StructType, codec: str, skip_nrows: int, pushed: list
+) -> Iterator:
+    """One file's records for the batch and stream readers: Arrow
+    RecordBatches for json under a flat schema (Spark passes them
+    through), else ``_decode_file``'s tuples, filtered by ``pushed``."""
+    names = schema.fieldNames()
+    if (
+        codec == "json"
+        and not pushed
+        and len(set(names)) == len(names)
+        and all(f.dataType.simpleString() in _SIMPLE_TYPES for f in schema.fields)
+    ):
+        return _json_batches(path, schema, skip_nrows)
+    rows = _decode_file(path, schema, codec, skip_nrows)
+    if not pushed:
+        return rows
+    return (row for row in rows if all(ev(row) is True for ev in pushed))
 
 
 def _spark_cmp(v, x) -> int:
@@ -189,16 +352,6 @@ _STR_OPS = {
     StringEndsWith: str.endswith,
     StringContains: str.__contains__,
 }
-
-# NOTE: no "float" — the decode path carries full Python doubles but
-# the non-pushdown pipeline truncates float32 columns at the Arrow
-# boundary BEFORE Spark evaluates filters, so a source-side comparison
-# on the untruncated value could disagree at precision boundaries.
-# float-column filters therefore stay Spark-side.
-_SIMPLE_TYPES = frozenset(
-    ("tinyint", "smallint", "int", "bigint", "double", "string", "boolean")
-)
-
 
 def _compile_filter(f: Filter, schema: StructType):
     """Compile a Catalyst pushed filter into a three-valued evaluator
@@ -287,16 +440,10 @@ class ShmrReader(DataSourceReader):
         # one task per file — the reference's parallelism unit
         return [_FilePartition(p) for p in self.paths]
 
-    def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        rows = _decode_file(
-            partition.path, self.schema_, self.codec, self.skip_nrows
+    def read(self, partition: _FilePartition) -> Iterator:
+        yield from _read_file(
+            partition.path, self.schema_, self.codec, self.skip_nrows, self._pushed
         )
-        if not self._pushed:
-            yield from rows
-            return
-        for row in rows:
-            if all(ev(row) is True for ev in self._pushed):
-                yield row
 
 
 class ShmrPushdownReader(ShmrReader):
@@ -417,9 +564,9 @@ class ShmrStreamReader(DataSourceStreamReader):
             )
         return [_FilePartition(p) for p in batch]
 
-    def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        yield from _decode_file(
-            partition.path, self.schema_, self.codec, self.skip_nrows
+    def read(self, partition: _FilePartition) -> Iterator:
+        yield from _read_file(
+            partition.path, self.schema_, self.codec, self.skip_nrows, []
         )
 
     def commit(self, end: dict) -> None:
@@ -458,7 +605,130 @@ def _meta_path(datafile: str) -> str:
     return os.path.splitext(datafile)[0] + ".meta"
 
 
-class ShmrWriter(DataSourceWriter):
+# json string values made only of these characters encode as
+# themselves in quotes: printable ASCII without '"' and '\\'
+_PLAIN_ASCII = r"^[ !#-\[\]-~]*$"
+
+
+def _structs_as_objects(v):
+    """Struct values (``Row``s, tuples that json would encode as arrays)
+    → dicts keyed by field name, at every depth; map keys stay as they
+    are."""
+    if isinstance(v, Row):
+        return {k: _structs_as_objects(x) for k, x in zip(v.__fields__, v)}
+    if isinstance(v, list):
+        return [_structs_as_objects(x) for x in v]
+    if isinstance(v, dict):
+        return {k: _structs_as_objects(x) for k, x in v.items()}
+    return v
+
+
+def _pylist_converter(dt):
+    """Arrow ``to_pylist`` value → the Python value a row writer sees
+    (pyspark's own conversion: local-time timestamps, bytes, Rows)."""
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+    return ArrowTableToRowsConversion._create_converter(
+        dt, none_on_identity=False, binary_as_bytes=True
+    )
+
+
+def _json_column(dt, enc: json.JSONEncoder):
+    """Arrow column → string array of each value's JSON text, exactly
+    ``enc.encode`` of the row writer's Python value: Arrow kernels for
+    integers, booleans and plain-ASCII strings, value by value for the
+    rest."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(dt, (ByteType, ShortType, IntegerType, LongType)):
+        return lambda a: pc.cast(a, pa.string()).fill_null("null")
+    if isinstance(dt, BooleanType):
+        return lambda a: pc.if_else(a, "true", "false").fill_null("null")
+    conv = _pylist_converter(dt)
+    nested = isinstance(dt, (StructType, ArrayType, MapType))
+
+    def by_value(a):
+        vals = map(conv, a.to_pylist())
+        if nested:
+            vals = map(_structs_as_objects, vals)
+        return pa.array([enc.encode(v) for v in vals], pa.string())
+
+    if not isinstance(dt, StringType):
+        return by_value
+
+    def string(a):
+        if pc.all(pc.match_substring_regex(a, _PLAIN_ASCII)).as_py() is False:
+            return by_value(a)
+        return pc.binary_join_element_wise('"', a, '"', "").fill_null("null")
+
+    return string
+
+
+def _json_encoder(schema: StructType):
+    """RecordBatch → the bytes of its ND-JSON lines: for each row,
+    ``json.dumps(dict(zip(names, row)), separators=(",", ":"),
+    default=_json_default)`` + newline, with struct values as objects.
+    A repeated name keeps its first position and its last value, as
+    ``dict`` does."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    enc = json.JSONEncoder(separators=(",", ":"), default=_json_default)
+    names = schema.fieldNames()
+    last = {k: i for i, k in enumerate(names)}
+    cols = [
+        (json.dumps(k) + ":", i, _json_column(schema.fields[i].dataType, enc))
+        for k, i in last.items()
+    ]
+
+    def encode(batch):
+        if not cols:
+            return b"{}\n" * batch.num_rows
+        pieces = []
+        for j, (key, i, col) in enumerate(cols):
+            pieces += [("{" if j == 0 else ",") + key, col(batch.column(i))]
+        lines = pc.binary_join_element_wise(*pieces, "}\n", "")
+        _, offsets, data = lines.buffers()
+        width = np.int64 if pa.types.is_large_string(lines.type) else np.int32
+        o = np.frombuffer(offsets, width)[lines.offset : lines.offset + len(lines) + 1]
+        return memoryview(data)[o[0] : o[-1]]
+
+    return encode
+
+
+def _csv_encoder(schema: StructType):
+    """RecordBatch → its CSV lines (``csv.writer`` defaults, one
+    newline-terminated record per row)."""
+    import csv as csvmod
+
+    convs = [_pylist_converter(f.dataType) for f in schema.fields]
+
+    class _Lines(list):
+        write = list.append  # csv.writer writes each record in one call
+
+    def encode(batch):
+        cols = [list(map(c, a.to_pylist())) for c, a in zip(convs, batch.columns)]
+        out = _Lines()
+        csvmod.writer(out).writerows(list(zip(*cols)) or [()] * batch.num_rows)
+        return "".join(line.rstrip("\r\n") + "\n" for line in out).encode()
+
+    return encode
+
+
+def _text_encoder(schema: StructType):
+    """RecordBatch → ``str`` of each row's first value, one per line."""
+    conv = _pylist_converter(schema.fields[0].dataType)
+
+    def encode(batch):
+        vals = map(conv, batch.column(0).to_pylist())
+        return "".join(str(v) + "\n" for v in vals).encode()
+
+    return encode
+
+
+class ShmrWriter(DataSourceArrowWriter):
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
         import glob as g
         import uuid
@@ -479,15 +749,15 @@ class ShmrWriter(DataSourceWriter):
                 os.remove(f)
 
     def write(self, iterator) -> _WroteFile:
-        import csv as csvmod
-        import io as iomod
         import uuid
 
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        names = self.schema_.fieldNames()
         ext = {"json": "json", "csv": "csv", "text": "txt"}[self.codec]
+        encode = {"json": _json_encoder, "csv": _csv_encoder, "text": _text_encoder}[
+            self.codec
+        ](self.schema_)
         suffix = f".{self.compression}" if self.compression else ""
         out = os.path.join(self.path, f"part-{pid:05d}-{self.token}.{ext}{suffix}")
         tmp = os.path.join(
@@ -496,21 +766,10 @@ class ShmrWriter(DataSourceWriter):
         os.makedirs(self.path, exist_ok=True)
         n = 0
         with _open_by_ext(tmp, "wb") as g:
-            for row in iterator:
-                if self.codec == "json":
-                    line = json.dumps(
-                        dict(zip(names, row)),
-                        separators=(",", ":"),
-                        default=_json_default,
-                    ).encode()
-                elif self.codec == "csv":
-                    buf = iomod.StringIO()
-                    csvmod.writer(buf).writerow(list(row))
-                    line = buf.getvalue().rstrip("\r\n").encode()
-                else:
-                    line = str(row[0]).encode()
-                g.write(line + b"\n")
-                n += 1
+            for batch in iterator:
+                if batch.num_rows:
+                    g.write(encode(batch))
+                    n += batch.num_rows
         os.replace(tmp, out)  # atomic publish; duplicate attempts converge
         # .meta sidecar — the reference's count memo
         # (/root/reference/shmr/partition_writer.py:64-85)

@@ -5,13 +5,33 @@ outputs are valid inputs for the REFERENCE CLI itself."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-from shmr_spark.sources.shmr_datasource import ShmrDataSource
+from shmr_spark.sources import shmr_datasource
+from shmr_spark.sources.shmr_datasource import (
+    ShmrDataSource,
+    ShmrReader,
+    _decode_file,
+    _FilePartition,
+    _json_batches,
+    _open_by_ext,
+)
 from tests.conftest import PEOPLE, people_rows, requires_reference
 
 
@@ -538,3 +558,244 @@ def test_pushdown_appears_in_plan_and_cuts_transfer(registered, tmp_path):
     )
     assert "PushedFilters" in plan and "GreaterThan(x,90)" in plan
     assert df.count() == 9
+
+
+def test_struct_columns_round_trip(registered, tmp_path):
+    """Struct values are written as JSON objects keyed by field name,
+    at every depth, so the reader takes the writer's output back."""
+    spark = registered
+    out = str(tmp_path / "st")
+    schema = (
+        "id bigint, st struct<x: bigint, y: string>, "
+        "arr array<struct<x: bigint, z: array<struct<w: double>>>>, "
+        "m map<string, struct<x: bigint>>"
+    )
+    df = spark.sql(
+        "SELECT id, named_struct('x', id, 'y', concat('v', id)) AS st, "
+        "array(named_struct('x', id, 'z', array(named_struct('w', id / 2)))) AS arr, "
+        "map('k', named_struct('x', id * 2)) AS m FROM range(5)"
+    )
+    df.coalesce(1).write.format("shmr").mode("append").save(out)
+    with open(glob.glob(f"{out}/part-*.json")[0]) as f:
+        assert json.loads(f.readline())["st"] == {"x": 0, "y": "v0"}
+    back = spark.read.format("shmr").schema(schema).load(f"{out}/part-*.json")
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
+def _write_lines(path, data: bytes) -> str:
+    with _open_by_ext(str(path), "wb") as f:
+        f.write(data)
+    return str(path)
+
+
+def test_malformed_json_lines_name_file_and_line(registered, tmp_path):
+    """A non-object or blank line fails with the file and line number,
+    as the CSV path does, not with AttributeError or a bare
+    JSONDecodeError."""
+    schema = StructType([StructField("a", LongType())])
+    for data, what in ((b'{"a":1}\n[1,2]\n', "expected an object"), (b'{"a":1}\n\n{"a":2}\n', "Expecting value")):
+        p = _write_lines(tmp_path / "bad.json", data)
+        with pytest.raises(ValueError, match=rf"malformed JSON record in {p} line 2: {what}"):
+            list(_decode_file(p, schema, "json", 0))
+    with pytest.raises(Exception, match="malformed JSON record in .*bad.json line 2"):
+        registered.read.format("shmr").schema("a bigint").load(p).collect()
+
+
+# The differential decoder check: _json_batches (Arrow blocks) against
+# _decode_file (per line), both through the tuple→Arrow conversion
+# Spark applies to a reader's output.
+_DIFF_SCHEMA = StructType(
+    [
+        StructField("a", LongType()),
+        StructField("i", IntegerType()),
+        StructField("b", DoubleType()),
+        StructField("s", StringType()),
+        StructField("t", BooleanType()),
+    ]
+)
+
+
+def _spark_rows(it):
+    """Rows as Spark receives them from a reader iterator (repr, so that
+    -0.0 differs from 0.0 and NaN equals NaN), or the exception type."""
+    from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
+
+    try:
+        batches = list(records_to_arrow_batches(iter(it), 10000, _DIFF_SCHEMA, ShmrDataSource({})))
+    except Exception as e:  # the outcome under comparison
+        return type(e)
+    return [repr(tuple(r.values())) for b in batches for r in b.to_pylist()]
+
+
+def _both_decoders(path: str, skip_nrows: int, block_bytes: int):
+    old = shmr_datasource._BLOCK_BYTES
+    shmr_datasource._BLOCK_BYTES = block_bytes
+    try:
+        got = _spark_rows(_json_batches(path, _DIFF_SCHEMA, skip_nrows))
+    finally:
+        shmr_datasource._BLOCK_BYTES = old
+    return got, _spark_rows(_decode_file(path, _DIFF_SCHEMA, "json", skip_nrows))
+
+
+@pytest.mark.parametrize(
+    "data, skip_nrows",
+    [
+        pytest.param(b'{"a":1}\n\n{"a":2}{"a":3}\n', 0, id="blank_line_and_two_objects_on_one_line"),
+        pytest.param(b'{"a":1}{"a":2}\n', 0, id="two_objects_on_one_line"),
+        pytest.param(b'{"b":-0}\n{"b":1.5}\n', 0, id="minus_zero_double"),
+        pytest.param(b'{"b":-0.0}\n', 0, id="minus_zero_point_zero_double"),
+        pytest.param(b'{"a":"12"}\n', 0, id="string_to_bigint"),
+        pytest.param(b'{"s":5}\n', 0, id="number_to_string"),
+        pytest.param(b'{"s":true}\n', 0, id="bool_to_string"),
+        pytest.param(b'{"a":1.0}\n', 0, id="float_to_bigint"),
+        pytest.param(b'{"t":"true"}\n', 0, id="string_to_boolean"),
+        pytest.param(b'{"a":1,"a":2}\n', 0, id="duplicate_key"),
+        pytest.param(b'{"b":NaN}\n{"b":-Infinity}\n', 0, id="nan"),
+        pytest.param(b'{"b":1e400}\n', 0, id="overflowing_double"),
+        pytest.param(b'{"s":"\\ud800"}\n', 0, id="lone_surrogate"),
+        pytest.param(b'{"x":"\xff"}\n', 0, id="bad_utf8_in_ignored_field"),
+        pytest.param(b'{"a":1}\nnull\n', 0, id="null_line"),
+        pytest.param(b'{"a":1}\r\n{"s":"x"}\r\n', 0, id="crlf"),
+        pytest.param(b'{"a":1}\n{"a":2}', 0, id="no_trailing_newline"),
+        pytest.param(b"", 0, id="empty_file"),
+        pytest.param(b'{"a":1}\n{"a":2}\n', 5, id="skip_nrows_past_end"),
+        pytest.param(b'{"a":1}\n   ', 0, id="whitespace_last_line"),
+    ],
+)
+def test_json_block_decoder_matches_per_line(tmp_path, data, skip_nrows):
+    path = _write_lines(tmp_path / "p.json", data)
+    for block_bytes in (1, 1 << 20):
+        got, want = _both_decoders(path, skip_nrows, block_bytes)
+        assert got == want, (block_bytes, got, want)
+
+
+_json_value = st.recursive(
+    st.none() | st.booleans() | st.integers(-(2**70), 2**70) | st.floats() | st.text(max_size=5),
+    lambda c: st.lists(c, max_size=3) | st.dictionaries(st.text(max_size=3), c, max_size=3),
+    max_leaves=5,
+)
+_typed_line = st.builds(
+    lambda rec, ascii_only: json.dumps(rec, ensure_ascii=ascii_only).encode(),
+    st.fixed_dictionaries(
+        {},
+        optional={
+            "a": st.none() | st.integers(-(2**63), 2**63 - 1),
+            "i": st.none() | st.integers(-(2**31), 2**31 - 1),
+            "b": st.none() | st.floats() | st.integers(-(2**80), 2**80),
+            "s": st.none() | st.text(),
+            "t": st.none() | st.booleans(),
+            "x": _json_value,
+        },
+    ),
+    st.booleans(),
+)
+_any_line = st.dictionaries(st.sampled_from("aibstx"), _json_value, max_size=4).map(
+    lambda rec: json.dumps(rec).encode()
+)
+_malformed_line = st.sampled_from(
+    [b"", b"  ", b"null", b"[1,2]", b'"x"', b"{", b'{"a":1}{"a":2}', b'{"a":1}\r{"a":2}',
+     b'{"a":01}', b'{"b":-0}', b'{"a":"12"}', b'{"s":5}', b'{"a":1.0}', b'{"a":1,"a":2}',
+     b'{"b":NaN}', b'{"b":1e400}', b'{"s":"\\ud800"}', b'{"s":"\xed\xa0\x80"}', b'{"x":"\xff"}',
+     b'\xef\xbb\xbf{"a":1}', b'{"i":3000000000}', b'{"x":[1,', b'2]}', b' {"a":1}']
+) | st.binary(max_size=10).map(lambda b: b"{" + b + b"}")
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(_typed_line | _typed_line | _any_line | _malformed_line, max_size=8),
+    st.sampled_from([b"\n", b"\r\n"]),
+    st.booleans(),
+    st.integers(0, 3),
+    st.booleans(),
+    st.integers(1, 64),
+)
+def test_json_block_decoder_differential(tmp_path_factory, lines, newline, trailing, skip_nrows, gz, block_bytes):
+    """Any mix of well-typed, coercing and malformed lines: the same
+    rows as the per-line decoder, or an exception on both sides. (Which
+    fault surfaces first in a file with several can differ: Spark
+    converts tuples 10000 rows at a time, the block decoder a block at
+    a time.)"""
+    data = newline.join(lines) + (newline if trailing and lines else b"")
+    path = _write_lines(tmp_path_factory.mktemp("d") / ("p.json.gz" if gz else "p.json"), data)
+    got, want = _both_decoders(path, skip_nrows, block_bytes)
+    if isinstance(want, type):
+        assert isinstance(got, type), (data, got, want)
+    else:
+        assert got == want, (data, got, want)
+
+
+def test_flat_json_reads_as_record_batches(tmp_path, monkeypatch):
+    """The Arrow block path engages on a well-formed flat gz file: the
+    reader yields RecordBatches, which Spark passes through, and no
+    block falls back to the per-line decoder."""
+    import pyarrow as pa
+
+    def per_line(*args):
+        raise AssertionError("a well-formed block fell back to the per-line decoder")
+
+    monkeypatch.setattr(shmr_datasource, "_json_rows", per_line)
+
+    recs = [{"id": i, "key": f"k{i % 7}", "x": i / 4, "ok": i % 2 == 0} for i in range(3000)]
+    path = _write_lines(
+        tmp_path / "part-00000.json.gz",
+        "".join(json.dumps(r, separators=(",", ":")) + "\n" for r in recs).encode(),
+    )
+    schema = StructType(
+        [
+            StructField("id", LongType()),
+            StructField("key", StringType()),
+            StructField("x", DoubleType()),
+            StructField("ok", BooleanType()),
+        ]
+    )
+    out = list(ShmrReader(schema, {"path": path}).read(_FilePartition(path)))
+    assert out and all(isinstance(b, pa.RecordBatch) for b in out)
+    assert pa.Table.from_batches(out).to_pylist() == recs
+
+
+@pytest.mark.parametrize("compression", ["", "gz"])
+def test_json_writer_matches_json_dumps(registered, tmp_path, compression):
+    """The Arrow writer's lines are byte-identical to json.dumps of each
+    collected row as a dict, and the .meta counts sum to _SUCCESS."""
+    from shmr_spark.sources.shmr_datasource import _json_default
+
+    spark = registered
+    out = str(tmp_path / "w")
+    df = spark.sql(
+        r"""
+        SELECT id, CAST(id AS INT) AS i, id % 3 = 0 AS flag,
+          CASE id % 9 WHEN 0 THEN 'héllo' WHEN 1 THEN 'q"uote' WHEN 2 THEN 'back\\slash'
+            WHEN 3 THEN concat('c', char(1), char(10), char(31)) WHEN 4 THEN concat('del', char(127))
+            WHEN 5 THEN '日本😀' WHEN 6 THEN NULL ELSE concat('plain ', id) END AS s,
+          concat('k', id) AS ascii,
+          CASE id % 7 WHEN 0 THEN CAST('NaN' AS DOUBLE) WHEN 1 THEN CAST('Infinity' AS DOUBLE)
+            WHEN 2 THEN CAST('-Infinity' AS DOUBLE) WHEN 3 THEN 1e16 WHEN 4 THEN -0.0
+            WHEN 5 THEN NULL ELSE id / 3.0 END AS d,
+          CAST(id / 7.0 AS FLOAT) AS f,
+          CASE WHEN id % 4 = 0 THEN NULL ELSE array(id, NULL) END AS arr,
+          map('a', id, 'b', NULL) AS m,
+          TIMESTAMP '2024-05-06 07:08:09.123456' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts,
+          DATE '2024-05-06' + CAST(id AS INT) AS dt,
+          CAST(id / 3 AS DECIMAL(12, 4)) AS dec,
+          CAST(concat('b', id) AS BINARY) AS bin,
+          CAST(NULL AS BIGINT) AS nul
+        FROM range(0, 200)
+        """
+    )
+    df.repartition(3).write.format("shmr").option("compression", compression).mode("append").save(out)
+    names = df.columns
+    want = sorted(
+        json.dumps(dict(zip(names, row)), separators=(",", ":"), default=_json_default)
+        for row in df.collect()
+    )
+    parts = glob.glob(f"{out}/part-*.json" + (".gz" if compression else ""))
+    got = []
+    for p in parts:
+        with _open_by_ext(p, "rb") as f:
+            got += f.read().decode().splitlines()
+    assert sorted(got) == want
+    metas = glob.glob(f"{out}/part-*.meta")
+    assert len(metas) == len(parts) == 3
+    total = sum(json.load(open(m))["n_records"] for m in metas)
+    assert total == json.load(open(f"{out}/_SUCCESS"))["n_records"] == 200
+
