@@ -28,6 +28,9 @@ collect() in operator paths; AQE-friendly; 100 TB-scale hygiene.
 from shmr_spark.session import get_spark
 from shmr_spark.catalog import load_table, load_tables
 from shmr_spark.dataset import Dataset
+from shmr_spark.pyship import install_zip_rescan_guard
+
+install_zip_rescan_guard()
 
 __version__ = "0.1.0"
 

@@ -9,6 +9,8 @@ and DuckDB preserve for list columns.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -17,20 +19,32 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+def double_sql(v) -> str:
+    """SQL text of the DOUBLE literal ``float(v)``, bit-identical to
+    ``F.lit(float(v))``: a finite value is ``repr(v)`` with the ``D``
+    suffix (repr round-trips the double, and the parser reads the
+    text, sign included, as one double — so ``-0.0D`` keeps its sign
+    where ``CAST(-0.0 AS DOUBLE)`` negates a decimal zero); NaN and
+    ±inf, which have no numeric literal, are cast from their Java
+    spellings."""
+    v = float(v)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{v!r}D"
+
+
 def lit_double_array(vals) -> Column:
     """Constant array<double> literal built as ONE parsed expression
     string instead of ``F.array(*[F.lit(float(v)) ...])`` — each
     F.lit is a py4j round trip, so a 64-dim probe vector costs ~65
     driver calls per construction (the lsh_bucket/minhash plan-BUILD
-    lesson). Bit-identical values: repr() round-trips each double and
-    the decimal-literal→DOUBLE cast is correctly rounded to the same
-    value F.lit ships."""
+    lesson). Bit-identical values element by element (``double_sql``)."""
     vals = list(vals)
     if not vals:
         return F.expr("CAST(array() AS ARRAY<DOUBLE>)")
-    return F.expr(
-        "array(" + ",".join(f"CAST({float(v)!r} AS DOUBLE)" for v in vals) + ")"
-    )
+    return F.expr("array(" + ",".join(map(double_sql, vals)) + ")")
 
 
 def dot(a: Column | str, b: Column | str) -> Column:

@@ -4,8 +4,8 @@ built-in streaming aggs can't express (guide: "Structured Streaming /
 Stateful").
 
 State per user: (last event epoch-second, open session count). Each
-micro-batch folds its events in timestamp order; a gap > gap_seconds
-opens a new session. Emits one row per user per batch with the
+micro-batch folds all of a user's events in timestamp order; a gap >
+gap_seconds opens a new session. Emits one row per user per batch with the
 running totals — outputMode("update") semantics.
 """
 
@@ -47,21 +47,22 @@ def _session_fold(
         last_ts, n_sessions, n_events = state.get
     else:
         last_ts, n_sessions, n_events = None, 0, 0
-    for pdf in pdfs:
-        # vectorized twin of the per-event fold (guide §4.2 — the
-        # Python boundary is per batch, so the per-row work must be
-        # numpy, not an interpreted loop): sort once, count gap
-        # crossings with a diff. A new session opens at the first
-        # event iff state is empty; at every event whose gap from its
-        # predecessor (carried last_ts included) exceeds the window.
-        ts = np.sort(pdf["epoch"].to_numpy(dtype=np.int64, copy=True))
-        if ts.size == 0:
-            continue
+    # One trigger's events of a group arrive as one or more pandas
+    # chunks (Arrow batches cut at maxRecordsPerBatch) in no time
+    # order: concatenate them and sort once, so the count does not
+    # depend on where the chunks were cut. Vectorized twin of the
+    # per-event fold (guide §4.2 — the Python boundary is per batch,
+    # so the per-row work must be numpy, not an interpreted loop):
+    # count gap crossings with a diff. A new session opens at the
+    # first event iff state is empty; at every event whose gap from
+    # its predecessor (carried last_ts included) exceeds the window.
+    chunks = [pdf["epoch"].to_numpy(dtype=np.int64) for pdf in pdfs]
+    ts = np.sort(np.concatenate(chunks)) if chunks else np.empty(0, np.int64)
+    if ts.size:
         if last_ts is None:
             n_sessions += 1 + int((np.diff(ts) > gap).sum())
         else:
-            full = np.concatenate(([last_ts], ts))
-            n_sessions += int((np.diff(full) > gap).sum())
+            n_sessions += int((np.diff(ts, prepend=last_ts) > gap).sum())
         last_ts = int(ts[-1])
         n_events += int(ts.size)
     state.update((last_ts, n_sessions, n_events))

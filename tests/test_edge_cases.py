@@ -10,6 +10,7 @@ from shmr_spark.dataset import Dataset
 from shmr_spark.dedup import minhash_near_duplicates
 from shmr_spark.functions.numeric import davg, dsum
 from shmr_spark.functions.text import token_count, token_count_re
+from shmr_spark.functions.vectors import lit_double_array
 from shmr_spark.operators import asof_join, salted_agg
 
 
@@ -192,6 +193,36 @@ def test_read_ndjson_tolerant_quarantines_bad_lines(spark, tmp_path):
     assert "null" in bad_lines
     assert any("truncat" in l for l in bad_lines)
     assert any("not json" in l for l in bad_lines)
+
+
+def test_double_literals_are_bit_identical_to_f_lit(spark):
+    """lit_double_array and lsh_bucket's parsed-string form write each
+    double as SQL text; the values must be F.lit's, bit for bit,
+    including the sign of zero, subnormals and the non-finite ones."""
+    import struct
+
+    from shmr_spark.dedup.embedding import lsh_bucket
+
+    vals = [0.5, -0.0, 5e-324, 1e16, float("nan"), float("inf"), float("-inf")]
+    row = spark.range(1).select(
+        lit_double_array(vals).alias("parsed"),
+        F.array(*map(F.lit, vals)).alias("lit"),
+    ).first()
+
+    def bits(xs):
+        return [struct.pack(">d", x).hex() for x in xs]
+
+    assert bits(row.parsed) == bits(row.lit)
+    assert bits(row.parsed) == bits(vals)
+
+    planes = [[-0.0, 1.0], [float("inf"), 0.5], [5e-324, float("-inf")]]
+    vecs = spark.createDataFrame(
+        [([1.0, 2.0],), ([-1.0, 0.0],), ([0.0, -3.0],)], "v array<double>"
+    )
+    got = vecs.select(
+        lsh_bucket("v", planes).alias("parsed"), lsh_bucket(F.col("v"), planes).alias("lit")
+    ).collect()
+    assert [r.parsed for r in got] == [r.lit for r in got]
 
 
 def test_gate_cosines_clear_round_boundaries(spark, sf_dir):

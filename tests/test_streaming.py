@@ -102,6 +102,79 @@ def test_sessionize_stream_final_state_equals_batch(spark, sf_dir, events_dir):
     assert s == b
 
 
+class _StubState:
+    """The part of GroupState that _session_fold uses."""
+
+    def __init__(self, value=None):
+        self.exists = value is not None
+        self.get = value
+
+    def update(self, value):
+        self.exists, self.get = True, value
+
+
+def _fold(chunks, state=None):
+    import pandas as pd
+
+    from shmr_spark.streaming.stateful import _session_fold
+
+    st = _StubState(state)
+    out = next(_session_fold((7,), [pd.DataFrame({"epoch": c}) for c in chunks], st))
+    return (int(out["n_sessions"][0]), int(out["n_events"][0])), st.get
+
+
+def test_session_fold_does_not_depend_on_chunking():
+    """A trigger's events of one user can arrive in several pandas
+    chunks in any time order; the count must be that of the sorted
+    events (gap 1800 s)."""
+    whole, state = _fold([[0, 5000]])
+    assert whole == (2, 2) and state == (5000, 2, 2)
+    assert _fold([[5000], [0]]) == (whole, state)
+    assert _fold([[5000], [], [0]]) == (whole, state)
+    # carried state: 100 continues the session ended at 0; 9000 opens one
+    assert _fold([[9000], [100]], state=(0, 1, 1)) == ((2, 3), (9000, 2, 3))
+    assert _fold([], state=(0, 1, 1)) == ((1, 1), (0, 1, 1))
+
+
+def test_sessionize_stream_equals_batch_when_groups_span_chunks(
+    spark, sf_dir, tmp_path
+):
+    """Same as the stream ≡ batch check, over the events in descending
+    time order and with Arrow batches of 3 rows, so every user with
+    more than 3 events reaches the fold in chunks, later ones first."""
+    import pyarrow.parquet as pq
+
+    events_dir = tmp_path / "events_desc"
+    events_dir.mkdir()
+    table = pq.read_table(f"{sf_dir}/events.parquet")
+    pq.write_table(table.sort_by([("ts", "descending")]), events_dir / "events.parquet")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        q = (
+            sessionize_stream(read_events_stream(spark, str(events_dir)))
+            .writeStream.outputMode("update")
+            .format("memory")
+            .queryName("sess_chunked")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        final = spark.sql(
+            "SELECT user_id, max(n_sessions), max(n_events) FROM sess_chunked"
+            " GROUP BY user_id"
+        ).collect()
+    finally:
+        spark.conf.set(key, before)
+    batch = load_all()["sessionize"].fn(spark, sf_dir)
+    assert {tuple(r) for r in final} == {
+        (r.user_id, r.n_sessions, r.n_events) for r in batch.collect()
+    }
+
+
 def test_watermark_present_in_plan(spark, events_dir):
     sdf = tumbling_window_stream(read_events_stream(spark, events_dir), watermark="2 hours")
     assert "EventTimeWatermark" in sdf._jdf.queryExecution().analyzed().toString()
